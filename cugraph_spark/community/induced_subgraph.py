@@ -10,7 +10,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..constants import SRC, DST, WEIGHT
+from ..plans import iterloop
 from ..structure.graph import Graph
+
+
+def _vertex_type(edges: DataFrame) -> str:
+    """DDL type of the external vertex ids in ``edges`` (``G.edges()``)."""
+    return edges.schema[SRC].dataType.simpleString()
+
+
+def _vertex_frame(edges: DataFrame, vertices) -> DataFrame:
+    """The selected vertices as a one-column ``_v`` frame of external ids."""
+    if isinstance(vertices, DataFrame):
+        return vertices.select(F.col(vertices.columns[0]).alias("_v"))
+    return iterloop.local_table(
+        edges.sparkSession, [(v,) for v in vertices], f"_v {_vertex_type(edges)}"
+    )
 
 
 def induced_subgraph(G: Graph, vertices, offsets=None):
@@ -24,7 +39,7 @@ def induced_subgraph(G: Graph, vertices, offsets=None):
     DataFrame-native form of the reference's (Graph, seeds_offsets)
     pair (a batch column replaces offset bookkeeping). Without
     ``offsets`` a Graph is returned."""
-    spark = G.edgelist.sparkSession
+    edges = G.edges()
     if offsets is not None:
         if isinstance(vertices, DataFrame):
             raise ValueError("offsets requires a flat vertex list")
@@ -34,8 +49,9 @@ def induced_subgraph(G: Graph, vertices, offsets=None):
             for b in range(len(offs) - 1)
             for v in vertices[offs[b]:offs[b + 1]]
         ]
-        bdf = spark.createDataFrame(rows, ["batch", "_v"])
-        edges = G.edges()
+        bdf = iterloop.local_table(
+            edges.sparkSession, rows, f"batch long, _v {_vertex_type(edges)}"
+        )
         cols = [c for c in (SRC, DST, WEIGHT) if c in edges.columns]
         out = (
             edges.join(bdf.withColumnRenamed("_v", SRC), SRC)
@@ -47,12 +63,7 @@ def induced_subgraph(G: Graph, vertices, offsets=None):
             .select("batch", *cols)
         )
         return out, offs
-    if isinstance(vertices, DataFrame):
-        vdf = vertices.select(F.col(vertices.columns[0]).alias("_v"))
-    else:
-        vdf = spark.createDataFrame([(v,) for v in vertices], ["_v"])
-
-    edges = G.edges()
+    vdf = _vertex_frame(edges, vertices)
     edges = edges.join(vdf.withColumnRenamed("_v", SRC), SRC, "left_semi")
     edges = edges.join(vdf.withColumnRenamed("_v", DST), DST, "left_semi")
 
@@ -73,12 +84,8 @@ def induced_subgraph_edges(G: Graph, vertices) -> DataFrame:
     """Unique (src < dst) external-id pairs of the induced subgraph —
     the edge-list query surface, skipping the Graph rebuild the Graph
     surface pays around rows that are immediately flattened back."""
-    spark = G.edgelist.sparkSession
-    if isinstance(vertices, DataFrame):
-        vdf = vertices.select(F.col(vertices.columns[0]).alias("_v"))
-    else:
-        vdf = spark.createDataFrame([(v,) for v in vertices], ["_v"])
     edges = G.edges()
+    vdf = _vertex_frame(edges, vertices)
     edges = edges.join(vdf.withColumnRenamed("_v", SRC), SRC, "left_semi")
     edges = edges.join(vdf.withColumnRenamed("_v", DST), DST, "left_semi")
     return edges.filter(F.col(SRC) < F.col(DST)).select(SRC, DST)

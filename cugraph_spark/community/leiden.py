@@ -79,8 +79,8 @@ def _split_disconnected(
         if not parent:
             # no intra edges: every vertex is its own component
             return assign.select("vertex", F.col("vertex").alias("community"))
-        lab_df = spark.createDataFrame(
-            [(int(v), int(find(v))) for v in parent], "vertex long, _lab long"
+        lab_df = iterloop.local_table(
+            spark, [(int(v), int(find(v))) for v in parent], "vertex long, _lab long"
         )
         return assign.join(F.broadcast(lab_df), "vertex", "left").select(
             "vertex", F.coalesce("_lab", F.col("vertex")).alias("community")

@@ -46,8 +46,8 @@ def _apply_tail(mapping: DataFrame, comm: dict) -> DataFrame:
     if not comm:
         return mapping
     spark = mapping.sparkSession
-    tail_df = spark.createDataFrame(
-        [(int(a), int(b)) for a, b in comm.items()], "community long, _next long"
+    tail_df = iterloop.local_table(
+        spark, [(int(a), int(b)) for a, b in comm.items()], "community long, _next long"
     )
     return iterloop.materialize(
         mapping.join(F.broadcast(tail_df), "community", "left").select(

@@ -75,6 +75,6 @@ def approximate_weighted_matching(G: Graph) -> DataFrame:
         )
 
     if matched is None:
-        matched = G.edgelist.sparkSession.createDataFrame([], "vertex long, match long")
+        matched = iterloop.local_table(G.edgelist.sparkSession, [], "vertex long, match long")
     out = G.unrenumber(matched, "vertex")
     return G.unrenumber(out, "match")

@@ -35,8 +35,6 @@ Spark mapping (SURVEY §2.E):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 
 from ..constants import SRC, DST
@@ -57,27 +55,6 @@ from ..structure.symmetrize import add_reverse_edges
 # The cap sits between the two measurements, aligned with the state
 # threshold.
 _LABELMAP_BROADCAST_MAX_ROWS = 3_000_000
-
-
-#: Hash-min propagation passes fused into each wcc swap+convergence job;
-#: env-overridable (SPARK_GRAFT_WCC_PASSES) for A/B. Propagation is
-#: confluent min, so any k computes the identical fixpoint. Measured r7
-#: (sf0.1 cust-supp graph, interleaved min/median of 4): 32 cores k=1
-#: 2.04/2.39s, k=2 2.28/2.45s, k=3 2.21/2.53s; 8 cores k=1 2.33/2.78s,
-#: k=2 2.30/2.68s — all within this box's noise band. The per-pass fixed
-#: cost here is the THREE broadcast builds (state, nbr_min, lab_min),
-#: which batching cannot remove, not the driver sync — so the default
-#: stays 1 (extra passes past convergence also cost a full E-scan each
-#: at scale). The batching path stays for cluster A/Bs where the driver
-#: round-trip is hundreds of ms, not single-digit.
-WCC_PASSES_PER_SYNC = 1
-
-
-def _wcc_passes_per_sync() -> int:
-    try:
-        return max(1, int(os.environ.get("SPARK_GRAFT_WCC_PASSES", str(WCC_PASSES_PER_SYNC))))
-    except ValueError:
-        return WCC_PASSES_PER_SYNC
 
 
 def _skew_safe_hint(df: DataFrame, n_rows: int | None):
@@ -115,7 +92,6 @@ def weakly_connected_components(
 
     labels = G.vertices_internal.select("vertex", F.col("vertex").alias("label"))
     labels = iterloop.materialize(labels)
-    it = 0
     # Per-round state swap + convergence scalar fused into ONE job
     # (iterloop.FusedSwap): the new label table is local-checkpointed
     # lazily (plan becomes a leaf immediately) and the changed-labels agg
@@ -182,23 +158,10 @@ def weakly_connected_components(
             )
         )
 
-    # WCC_PASSES_PER_SYNC hash-min passes per swap+convergence job (r6
-    # verdict #6, guide §2 fixed-cost): min-label propagation is
-    # confluent — extra passes never change the fixpoint — so batching k
-    # passes into one driver round is semantics-free. Intermediate pass
-    # states are leaf-swapped (defer) so each pass's blocks are computed
-    # once inside the single fused job and every consumer reads the
-    # blocks. The convergence check stays sound: the LAST pass changing
-    # nothing means its input was already the fixpoint.
-    k_passes = _wcc_passes_per_sync()
     with iterloop.small_plan(edges.sparkSession, G.number_of_vertices()):
         while True:
-            it += 1
-            step = labels
-            for _ in range(k_passes - 1):
-                step = fs.defer(_prop_round(step).select("vertex", "label"))
             new_labels, (changes,) = fs.swap(
-                _prop_round(step),
+                _prop_round(labels),
                 [F.sum((F.col("label") != F.col("_old")).cast("long"))],
             )
             labels = new_labels.select("vertex", "label")

@@ -40,5 +40,5 @@ def topological_sort(G: Graph) -> DataFrame:
         )
         level += 1
     if out is None:
-        out = spark.createDataFrame([], "vertex long, level int")
+        out = iterloop.local_table(spark, [], "vertex long, level int")
     return G.unrenumber(out, "vertex")

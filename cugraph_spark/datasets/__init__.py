@@ -22,6 +22,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..plans import iterloop
+
 _DOWNLOAD_DIR: str | None = None
 
 # Zachary karate club (public domain; 78 undirected pairs, 34 vertices).
@@ -76,7 +78,10 @@ class Dataset:
                 r + ((1.0,) if len(self.col_names) == 3 else ())
                 for r in self.inline_rows
             ]
-            return spark.createDataFrame(rows, list(self.col_names))
+            types = ("long", "long", "double")
+            return iterloop.local_table(
+                spark, rows, ", ".join(f"{c} {t}" for c, t in zip(self.col_names, types))
+            )
         path = self.get_path()
         if os.path.exists(path):
             return (

@@ -130,11 +130,11 @@ def hungarian_auction(
     if isinstance(workers, DataFrame):
         wdf = workers.select(F.col(workers.columns[0]).alias("_worker")).distinct()
     else:
-        wdf = spark.createDataFrame([(int(w),) for w in workers], "_worker long")
+        wdf = iterloop.local_table(spark, [(int(w),) for w in workers], "_worker long")
     wdf = iterloop.persist(wdf)
     (n_workers,) = iterloop.collect_scalars(wdf, [F.count("*")])
     if not n_workers:
-        return 0.0, spark.createDataFrame([], "vertex long, assignment long")
+        return 0.0, iterloop.local_table(spark, [], "vertex long, assignment long")
 
     # candidate edges: worker -> task with benefit = -cost (auction
     # maximizes); parallel edges keep the cheapest
@@ -368,7 +368,8 @@ def hungarian(G: Graph, workers, epsilon: float | None = None):
         return hungarian_auction(G, workers, epsilon=epsilon)
     wset = set(workers)
     widx = {w: i for i, w in enumerate(workers)}
-    edges = G.edges().collect()  # small-N driver path (see module docstring)
+    edges_df = G.edges()
+    edges = edges_df.collect()  # small-N driver path (see module docstring)
     tasks = sorted({r[DST] for r in edges if r[SRC] in wset})
     tidx = {t: i for i, t in enumerate(tasks)}
     if len(workers) > len(tasks):
@@ -382,5 +383,6 @@ def hungarian(G: Graph, workers, epsilon: float | None = None):
     assign = _solve_dense(mat)
     total = sum(mat[i][assign[i]] for i in range(len(workers)))
     rows = [(w, tasks[assign[i]]) for i, w in enumerate(workers)]
-    df = spark.createDataFrame(rows, ["vertex", "assignment"])
+    ext = {f.name: f.dataType.simpleString() for f in edges_df.schema}
+    df = iterloop.local_table(spark, rows, f"vertex {ext[SRC]}, assignment {ext[DST]}")
     return total, df

@@ -183,12 +183,30 @@ def _pair_cosine(q_col, c_col):
 def _unit_centroid_rows(cent) -> list[tuple[int, list[float]]]:
     """Collect the unit-normalized centroid table to the driver —
     n_lists x dim doubles, a few KB. Normalization happens in Spark
-    (same ``_unit`` expression the old join-based assignment used), so the collected
-    values are bit-identical to the ``_cru`` column a join would see."""
-    return sorted(
-        ((r[0], list(r[1])) for r in _unit(cent, "_ctr", "_cru").select("list_id", "_cru").collect()),
-        key=lambda t: t[0],
+    (same expression as ``_unit``), so the collected values are
+    bit-identical to the ``_cru`` column a join would see. A zero-norm
+    centroid (a list whose members average to zero) normalizes to nulls
+    instead of dividing by zero; ``_nearest_unit`` never picks it."""
+    unit = cent.withColumn("_nrm", _norm(F.col("_ctr"))).select(
+        "list_id",
+        F.transform(
+            "_ctr", lambda x: F.when(F.col("_nrm") > 0, x / F.col("_nrm"))
+        ).alias("_cru"),
     )
+    return sorted(((r[0], list(r[1])) for r in unit.collect()), key=lambda t: t[0])
+
+
+def _nearest_unit(x, cu):
+    """Row-wise argmax of ``x @ cu`` over the columns of a unit-centroid
+    matrix ``cu`` (dim x n_lists). A zero-norm centroid normalizes to a
+    NaN column, and ``np.argmax`` returns the first NaN: every row would
+    land in that list. Such columns score -inf instead, so a row picks
+    one only when no list has a finite centroid."""
+    import numpy as np
+
+    scores = x @ cu
+    scores[:, ~np.isfinite(cu).all(axis=0)] = -np.inf
+    return np.argmax(scores, axis=1)
 
 
 def _assign_lists(df: DataFrame, crows: list[tuple[int, list[float]]]) -> DataFrame:
@@ -223,7 +241,7 @@ def _assign_lists(df: DataFrame, crows: list[tuple[int, list[float]]]) -> DataFr
                 yield pd.Series([], dtype="int64")
                 continue
             x = np.stack(s.to_numpy()).astype(np.float64, copy=False)
-            yield pd.Series(lids[np.argmax(x @ cmat, axis=1)])
+            yield pd.Series(lids[_nearest_unit(x, cmat)])
 
     return df.select("vec_id", "_cv", _nearest("_cv").alias("list_id"))
 
@@ -258,7 +276,7 @@ def _kmeans_driver(train, dim: int, n_lists: int, kmeans_iters: int, seed: int):
     for _ in range(kmeans_iters):
         with np.errstate(divide="ignore", invalid="ignore"):
             cu = C / np.sqrt((C * C).sum(axis=1, keepdims=True))
-        assign = np.argmax(X @ cu.T, axis=1)
+        assign = _nearest_unit(X, cu.T)
         for lid in range(k_eff):
             members = assign == lid
             if members.any():
@@ -266,7 +284,8 @@ def _kmeans_driver(train, dim: int, n_lists: int, kmeans_iters: int, seed: int):
             # empty lists keep their previous centroid (same carry-forward
             # as the distributed left-join + coalesce)
     spark = train.sparkSession
-    return spark.createDataFrame(
+    return iterloop.local_table(
+        spark,
         [(int(i), [float(x) for x in C[i]]) for i in range(k_eff)],
         "list_id int, _ctr array<double>",
     )
@@ -383,9 +402,7 @@ def ivf_topk(
     # and shuffled the whole payload through a groupBy(vec_id) — both
     # gone; the corpus is scanned once, unshuffled.
     crows = _unit_centroid_rows(cent)
-    cent_u = c.sparkSession.createDataFrame(
-        [(lid, vec) for lid, vec in crows], "list_id int, _cru array<double>"
-    )
+    cent_u = iterloop.local_table(c.sparkSession, crows, "list_id int, _cru array<double>")
     assigned = _assign_lists(c, crows)  # (vec_id, _cv, list_id)
 
     q = _unit(

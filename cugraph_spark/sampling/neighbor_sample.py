@@ -89,12 +89,14 @@ def homogeneous_neighbor_sample(
             for b in range(len(offs) - 1):
                 for i in range(offs[b], offs[b + 1]):
                     batch_of[i] = b
-            seeds = spark.createDataFrame(
+            seeds = iterloop.local_table(
+                spark,
                 [(int(v), batch_of.get(i, 0)) for i, v in enumerate(ids)],
                 "vertex long, batch_id int",
             )
         else:
-            seeds = spark.createDataFrame(
+            seeds = iterloop.local_table(
+                spark,
                 [(int(v), i if with_batch_ids else 0) for i, v in enumerate(ids)],
                 "vertex long, batch_id int",
             )
@@ -172,7 +174,9 @@ def homogeneous_neighbor_sample(
 
     edges.unpersist()
     if out is None:
-        out = spark.createDataFrame([], "majors long, minors long, batch_id int, hop_id int")
+        out = iterloop.local_table(
+            spark, [], "majors long, minors long, batch_id int, hop_id int"
+        )
     if "seed_time" in out.columns:
         out = out.drop("seed_time")
     renumber_map = None

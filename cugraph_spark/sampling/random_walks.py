@@ -41,8 +41,10 @@ def _walk(
     w = F.col(WEIGHT) if G.is_weighted() else F.lit(1.0)
     edges = iterloop.persist(G.edgelist.select(SRC, DST, w.alias("_w")))
 
-    walkers = spark.createDataFrame(
-        [(i, int(v), int(v)) for i, v in enumerate(ids)], "walk_id long, start long, cur long"
+    walkers = iterloop.local_table(
+        spark,
+        [(i, int(v), int(v)) for i, v in enumerate(ids)],
+        "walk_id long, start long, cur long",
     ).withColumn("prev", F.lit(None).cast("long"))
     # trace rows: (walk_id, step, vertex, in_weight)
     trace = walkers.select(

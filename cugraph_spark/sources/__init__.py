@@ -29,6 +29,7 @@ from typing import Optional, Sequence, Union
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..constants import DST, SRC, WEIGHT
+from ..plans import iterloop
 
 _FORMATS = ("csv", "parquet", "json", "orc")
 
@@ -168,7 +169,7 @@ def save_graph(G, path: str, mode: str = "error") -> None:
         "external_types": [t.simpleString() for t in nm.external_types],
     }
     spark = G.edgelist.sparkSession
-    spark.createDataFrame([(json.dumps(meta),)], "meta string").coalesce(1).write.mode(
+    iterloop.local_table(spark, [(json.dumps(meta),)], "meta string").coalesce(1).write.mode(
         mode
     ).json(os.path.join(path, "properties"))
 
@@ -252,7 +253,7 @@ def save_graph_table(
         "external_cols": list(nm.external_cols),
         "external_types": [t.simpleString() for t in nm.external_types],
     }
-    props = spark.createDataFrame([(json.dumps(meta),)], "meta string")
+    props = iterloop.local_table(spark, [(json.dumps(meta),)], "meta string")
     tables.append(_write(props, "properties"))
     if path is not None:
         # commit marker: written LAST so a crashed save is never adopted

@@ -12,6 +12,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..plans import iterloop
 from .graph import Graph
 
 
@@ -33,9 +34,12 @@ def from_edgelist(
 
     spark = spark or SparkSession.getActiveSession()
     if isinstance(df, pd.DataFrame):
-        df = spark.createDataFrame(df)
+        df = iterloop.local_table(spark, df)
     if vertices is not None and not hasattr(vertices, "sparkSession"):
-        vertices = spark.createDataFrame([(v,) for v in list(vertices)], ["vertex"])
+        vtype = df.schema[source if isinstance(source, str) else source[0]].dataType
+        vertices = iterloop.local_table(
+            spark, [(v,) for v in list(vertices)], f"vertex {vtype.simpleString()}"
+        )
     if isinstance(create_using, type):
         g = create_using()
     else:
@@ -82,9 +86,9 @@ def from_adjlist(
             w = float(values[pos]) if values is not None else None
             rows.append((v, int(indices[pos]), w))
     if values is not None:
-        df = spark.createDataFrame(rows, "src long, dst long, weight double")
+        df = iterloop.local_table(spark, rows, "src long, dst long, weight double")
         return from_edgelist(df, edge_attr="weight", create_using=create_using, spark=spark)
-    df = spark.createDataFrame([(a, b) for a, b, _ in rows], "src long, dst long")
+    df = iterloop.local_table(spark, [(a, b) for a, b, _ in rows], "src long, dst long")
     return from_edgelist(df, create_using=create_using, spark=spark)
 
 

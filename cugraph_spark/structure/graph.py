@@ -274,7 +274,7 @@ class Graph:
 
     def from_pandas_edgelist(self, pdf, spark, **kwargs) -> "Graph":
         """convert_matrix.py:261 — pandas round-trip through createDataFrame."""
-        return self.from_edgelist(spark.createDataFrame(pdf), **kwargs)
+        return self.from_edgelist(iterloop.local_table(spark, pdf), **kwargs)
 
     # -- views ---------------------------------------------------------------
 
@@ -484,7 +484,9 @@ class Graph:
             return [int(v) for v in values]
         spark = self._spark
         ext = self._nm.external_cols[0]
-        df = spark.createDataFrame([(v,) for v in values], [ext])
+        df = iterloop.local_table(
+            spark, [(v,) for v in values], f"{ext} {self._nm.external_types[0].simpleString()}"
+        )
         rows = df.join(self._nm.map_df, ext).select("_internal_id").collect()
         if len(rows) != len(values):
             raise ValueError("some vertices not found in graph")

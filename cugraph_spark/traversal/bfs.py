@@ -12,8 +12,11 @@ the Spark analog of the reference's top-down/bottom-up switch). New
 vertices take the MINIMUM predecessor for determinism.
 
 Scale note: ``visited`` grows to V rows; the anti-join per level is a
-shuffle of at most V rows, and lineage is truncated every level via
-localCheckpoint so 1000-level graphs don't blow up the plan.
+shuffle of at most V rows. Each level's frontier is a checkpoint leaf
+(``FusedSwap``) and the ``visited`` union is cut by localCheckpoint every
+4 levels, so 1000-level graphs don't blow up the plan. The seed row is an
+Arrow ``LocalRelation`` (``iterloop.local_table``), so levels before the
+first cut scan no Python-built RDD.
 """
 
 from __future__ import annotations
@@ -57,8 +60,8 @@ def bfs(
     spark = G.edgelist.sparkSession
     edges = G.edgelist.select(SRC, DST)
 
-    visited = spark.createDataFrame(
-        [(i, 0, -1) for i in ids], "vertex long, distance int, predecessor long"
+    visited = iterloop.local_table(
+        spark, [(i, 0, -1) for i in ids], "vertex long, distance int, predecessor long"
     )
     frontier = visited.select("vertex")
     depth = 0
@@ -183,7 +186,8 @@ def multi_source_bfs(
     spark = G.edgelist.sparkSession
     edges = G.edgelist.select(SRC, DST)
 
-    visited = spark.createDataFrame(
+    visited = iterloop.local_table(
+        spark,
         [(i, i, 0, -1) for i in ids],
         "source long, vertex long, distance int, predecessor long",
     )

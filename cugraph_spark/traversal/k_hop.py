@@ -40,8 +40,8 @@ def od_shortest_distances(G: Graph, origins, destinations) -> DataFrame:
     w = F.col(WEIGHT).cast("double") if G.is_weighted() else F.lit(1.0)
     edges = iterloop.persist(G.edgelist.select(SRC, DST, w.alias("_w")))
 
-    dist = spark.createDataFrame(
-        [(int(o), int(o), 0.0) for o in o_ids], "origin long, vertex long, distance double"
+    dist = iterloop.local_table(
+        spark, [(int(o), int(o), 0.0) for o in o_ids], "origin long, vertex long, distance double"
     )
     dist = iterloop.materialize(dist)
     frontier = dist
@@ -75,7 +75,7 @@ def od_shortest_distances(G: Graph, origins, destinations) -> DataFrame:
         frontier = improved
 
     edges.unpersist()
-    ddf = spark.createDataFrame([(int(d),) for d in d_ids], "vertex long")
+    ddf = iterloop.local_table(spark, [(int(d),) for d in d_ids], "vertex long")
     out = dist.join(ddf, "vertex").select(
         "origin", F.col("vertex").alias("destination"), "distance"
     )

@@ -27,9 +27,7 @@ def extract_bfs_paths(
     if not isinstance(destinations, list):
         destinations = [destinations]
     vtype = dict(bfs_df.dtypes)["vertex"]
-    dests = spark.createDataFrame([(d,) for d in destinations], ["destination"]).select(
-        F.col("destination").cast(vtype)
-    )
+    dests = iterloop.local_table(spark, [(d,) for d in destinations], f"destination {vtype}")
 
     # The predecessor table is loop-invariant and V-sized while the state
     # is destinations-sized: hash-partition + sort it ON the join key once

@@ -70,7 +70,8 @@ def sssp(
     w = F.col(edge_attr).cast("double") if edge_attr in edges.columns else F.lit(1.0)
     edges = edges.select(SRC, DST, w.alias("_w"))
 
-    dist = spark.createDataFrame(
+    dist = iterloop.local_table(
+        spark,
         [(sid, 0.0, -1, True)],
         "vertex long, distance double, predecessor long, _impr boolean",
     )

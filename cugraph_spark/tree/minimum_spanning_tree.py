@@ -140,8 +140,8 @@ def _boruvka(G: Graph, sign: float) -> DataFrame:
 
     edges.unpersist()
     if chosen is None:
-        return G.edgelist.sparkSession.createDataFrame(
-            [], f"{SRC} long, {DST} long, {WEIGHT} double"
+        return iterloop.local_table(
+            G.edgelist.sparkSession, [], f"{SRC} long, {DST} long, {WEIGHT} double"
         )
     return chosen
 

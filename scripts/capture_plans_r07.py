@@ -97,11 +97,10 @@ def main() -> None:
         title = "per-member degree = its own E-sized groupBy aggregate (per ensemble member)"
     save("ecg_member_deg", tag, (title, explain_str(member_deg)))
 
-    # ---- wcc round body (batched passes) ------------------------------------
+    # ---- wcc round body ------------------------------------------------
     import cugraph_spark.components.connectivity as conn
 
     labels = iterloop.materialize(g.vertices_internal.select("vertex", F.col("vertex").alias("label")))
-    fs = iterloop.FusedSwap()
 
     def prop_round(cur):
         nbr_min = (
@@ -122,20 +121,12 @@ def main() -> None:
             "_old",
         )
 
-    k_passes = getattr(conn, "WCC_PASSES_PER_SYNC", 1)
     with iterloop.small_plan(spark, n):
-        step = labels
-        for _ in range(k_passes - 1):
-            step = fs.defer(prop_round(step).select("vertex", "label"))
-        body = prop_round(step)
+        body = prop_round(labels)
         save(
             "wcc_sync_body",
             tag,
-            (
-                f"one swap+convergence job = {k_passes} propagation pass(es) "
-                "(inner passes leaf-swapped via defer)",
-                explain_str(body),
-            ),
+            ("one swap+convergence job = one propagation pass", explain_str(body)),
         )
 
     # ---- betweenness backward level body ------------------------------------

@@ -146,6 +146,52 @@ def test_ivf_topk(vectors):
     assert ap == again
 
 
+def test_ivf_zero_norm_centroid_is_never_nearest(spark):
+    """A list whose members average to zero has a zero-norm centroid: its
+    unit vector is null in Spark and NaN in NumPy, and ``np.argmax``
+    returns the first NaN, which sent every row to that list. Both IVF
+    argmax sites (corpus assignment, driver Lloyd) must skip it."""
+    import numpy as np
+
+    from cugraph_spark.pipelines.similarity_search import (
+        _assign_lists,
+        _nearest_unit,
+        _unit_centroid_rows,
+    )
+    from cugraph_spark.plans.iterloop import local_table
+
+    members = {
+        0: [[1.0, 1.0], [-1.0, -1.0]],  # averages to (0, 0)
+        1: [[1.0, 0.0], [2.0, 0.2]],
+        2: [[0.0, 1.0], [0.1, 3.0]],
+    }
+    means = [np.mean(v, axis=0) for v in members.values()]
+    vecs = [v for vs in members.values() for v in vs]
+    cent = local_table(
+        spark, [(lid, m.tolist()) for lid, m in enumerate(means)], "list_id int, _ctr array<double>"
+    )
+    corpus = local_table(
+        spark, [(i, v) for i, v in enumerate(vecs)], "vec_id long, _cv array<double>"
+    )
+    # nearest by cosine among the lists with a nonzero centroid (1 and 2)
+    X = np.array(vecs)
+    unit = np.array(means[1:]) / np.linalg.norm(means[1:], axis=1, keepdims=True)
+    want = 1 + np.argmax(X @ unit.T, axis=1)
+    assert set(want) == {1, 2}
+
+    got = dict(_assign_lists(corpus, _unit_centroid_rows(cent)).select("vec_id", "list_id").collect())
+    assert [got[i] for i in range(len(vecs))] == want.tolist()
+
+    # driver Lloyd: the same matrix as _kmeans_driver normalizes it
+    C = np.array(means)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cu = C / np.sqrt((C * C).sum(axis=1, keepdims=True))
+    assert np.isnan(cu[0]).all()
+    assert _nearest_unit(X, cu.T).tolist() == want.tolist()
+    # no finite centroid at all: a defined answer, the first list
+    assert _nearest_unit(X, np.full((2, 3), np.nan)).tolist() == [0] * len(vecs)
+
+
 def test_embedding_near_duplicates(vectors):
     out = {(r["first"], r["second"]): r["cosine"] for r in embedding_near_duplicates(vectors, threshold=0.99).collect()}
     assert (0, 100) in out
