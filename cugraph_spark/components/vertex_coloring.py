@@ -29,8 +29,6 @@ greedy bound.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 
 from ..constants import SRC, DST
@@ -56,29 +54,19 @@ def _vertex_coloring_impl(G: Graph, seed: int, max_colors: int) -> DataFrame:
     # (checkpoint leaves carry no stats, so the planner cannot see this)
     hint = lambda df: iterloop.hint_state_join(df, G.number_of_vertices())
 
-    # Aggregation orientation (r6 verdict #8): the coloring edge view is
-    # always symmetric, so every per-round aggregation can key on either
-    # endpoint — SRC runs inside the cached hash(src) partitioning
-    # (exchange-free, like iterloop.sym_aligned_agg), DST pays a
-    # per-round exchange (r6 kept DST expecting ReusedExchange to
-    # amortize it across consumers). r7 re-ran the A/B at R-MAT scale-20
-    # (31.4M cached rows, 646k vertices, warm interleaved runs, 32c):
-    # src-flipped [74.2, 75.2, 89.7, 96.0] s vs dst-keyed [77.9, 103.0,
-    # 131.4, 231.2] s — flip wins the median by ~30% (82.5 vs 117.2) and
-    # ties the min; at sf0.01 flip also ties-or-wins (min 4.2 vs 6.2).
-    # The collect_set('used') aggregation is the decider: its partial
-    # buffers are NOT V-bounded (one color-set per dst per partition),
-    # so the dst-keyed exchange carries fat set buffers while the
-    # src-keyed form never leaves the cached partitioning. Flip is the
-    # default; SPARK_GRAFT_COLOR_FLIP=0 restores the dst orientation.
-    # Outputs verified identical either way (integer counts / sorted
-    # color sets per vertex — exact), undirected AND directed.
-    flip = os.environ.get("SPARK_GRAFT_COLOR_FLIP", "1") == "1"
-    agg_k, oth_k = (SRC, DST) if flip else (DST, SRC)
-    # "other endpoint beats the aggregated endpoint" by (priority, id)
-    p_agg, p_oth = ("_ps", "_pd") if agg_k == SRC else ("_pd", "_ps")
-    beat = (F.col(p_oth) > F.col(p_agg)) | (
-        (F.col(p_oth) == F.col(p_agg)) & (F.col(oth_k) > F.col(agg_k))
+    # Aggregation orientation (r6 verdict #8, settled r7): the coloring
+    # edge view is always symmetric, so every per-round aggregation keys
+    # on SRC and runs inside the cached hash(src) partitioning
+    # (exchange-free, like iterloop.sym_aligned_agg). The dst-keyed form
+    # paid a per-round exchange; at R-MAT scale-20 (31.4M cached rows,
+    # 646k vertices, warm interleaved runs, 32c) it lost the median by
+    # ~30% (117.2 vs 82.5 s) and tied the min. The collect_set('used')
+    # aggregation is the decider: its partial buffers are NOT V-bounded
+    # (one color-set per key per partition), so a dst-keyed exchange
+    # carries fat set buffers. Outputs were identical either way.
+    # "DST endpoint beats the aggregated SRC endpoint" by (priority, id)
+    beat = (F.col("_pd") > F.col("_ps")) | (
+        (F.col("_pd") == F.col("_ps")) & (F.col(DST) > F.col(SRC))
     )
 
     uncolored = iterloop.materialize(
@@ -109,14 +97,14 @@ def _vertex_coloring_impl(G: Graph, seed: int, max_colors: int) -> DataFrame:
             edges.join(hint(u_src), SRC)
             .join(hint(u_dst), DST)
             .filter(beat)
-            .groupBy(F.col(agg_k).alias("vertex"))
+            .groupBy(F.col(SRC).alias("vertex"))
             .agg(F.count("*").alias("_rank"))
         )
         if colored is not None:
             used = (
-                edges.join(hint(colored.select(F.col("vertex").alias(oth_k), "color")), oth_k)
-                .join(hint(uncolored.withColumnRenamed("vertex", agg_k)), agg_k, "left_semi")
-                .groupBy(F.col(agg_k).alias("vertex"))
+                edges.join(hint(colored.select(F.col("vertex").alias(DST), "color")), DST)
+                .join(hint(uncolored.withColumnRenamed("vertex", SRC)), SRC, "left_semi")
+                .groupBy(F.col(SRC).alias("vertex"))
                 .agg(F.sort_array(F.collect_set("color")).alias("_used"))
             )
         else:
@@ -156,7 +144,7 @@ def _vertex_coloring_impl(G: Graph, seed: int, max_colors: int) -> DataFrame:
             edges.join(hint(c_src), SRC)
             .join(hint(c_dst), DST)
             .filter((F.col("_cs") == F.col("_cd")) & beat)
-            .select(F.col(agg_k).alias("vertex"))
+            .select(F.col(SRC).alias("vertex"))
             .distinct()
         )
         newly = fs.defer(
@@ -190,8 +178,8 @@ def _vertex_coloring_impl(G: Graph, seed: int, max_colors: int) -> DataFrame:
     colored = iterloop.materialize(colored.join(hint(pri), "vertex"))
     for _ in range(3):
         used = (
-            edges.join(hint(colored.select(F.col("vertex").alias(oth_k), "color")), oth_k)
-            .groupBy(F.col(agg_k).alias("vertex"))
+            edges.join(hint(colored.select(F.col("vertex").alias(DST), "color")), DST)
+            .groupBy(F.col(SRC).alias("vertex"))
             .agg(F.sort_array(F.collect_set("color")).alias("_used"))
         )
         prop = (
@@ -223,7 +211,7 @@ def _vertex_coloring_impl(G: Graph, seed: int, max_colors: int) -> DataFrame:
             .filter(
                 F.col("_ws") & F.col("_wd") & (F.col("_ms") == F.col("_md")) & beat
             )
-            .select(F.col(agg_k).alias("vertex"))
+            .select(F.col(SRC).alias("vertex"))
             .distinct()
         )
         colored = iterloop.materialize(

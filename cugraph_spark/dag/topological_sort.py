@@ -19,10 +19,14 @@ def topological_sort(G: Graph) -> DataFrame:
     if not G.is_directed():
         raise ValueError("topological sort requires a directed graph")
     edges = iterloop.materialize(G.edgelist.select(SRC, DST))
-    remaining = iterloop.materialize(G.vertices_internal.select("vertex"))
+    # each remaining vertex carries the layer it would join next; the
+    # layer number comes from data (level + 1 per round), not from a
+    # per-round literal, so the loop body compiles once
+    remaining = iterloop.materialize(
+        G.vertices_internal.select("vertex", F.lit(0).cast("int").alias("level"))
+    )
     spark = edges.sparkSession
     out = None
-    level = 0
     while True:
         n_rem = remaining.count()
         if n_rem == 0:
@@ -31,14 +35,15 @@ def topological_sort(G: Graph) -> DataFrame:
         zero = iterloop.materialize(remaining.join(with_in, "vertex", "left_anti"))
         if zero.count() == 0:
             raise ValueError("graph contains a cycle; topological sort undefined")
-        layer = zero.select("vertex", F.lit(level).cast("int").alias("level"))
-        out = layer if out is None else out.unionByName(layer)
+        out = zero if out is None else out.unionByName(zero)
         out = iterloop.materialize(out)
-        remaining = iterloop.materialize(remaining.join(zero, "vertex", "left_anti"))
+        remaining = iterloop.materialize(
+            remaining.join(zero, "vertex", "left_anti")
+            .select("vertex", (F.col("level") + 1).alias("level"))
+        )
         edges = iterloop.materialize(
             edges.join(zero.withColumnRenamed("vertex", SRC), SRC, "left_anti")
         )
-        level += 1
     if out is None:
         out = iterloop.local_table(spark, [], "vertex long, level int")
     return G.unrenumber(out, "vertex")

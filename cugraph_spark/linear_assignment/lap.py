@@ -22,8 +22,6 @@ SURVEY §2.H: two routes, dispatched on problem size —
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 
 from ..constants import SRC, DST, WEIGHT
@@ -300,15 +298,6 @@ def hungarian_auction(
                 state, (n_owned, p_max) = swapper.swap(
                     new_state, [F.count("_owner"), F.max("_p")]
                 )
-                if os.environ.get("SPARK_GRAFT_LAP_DEBUG"):
-                    import sys as _sys
-                    import time as _time
-
-                    print(
-                        f"lap sweep {sweeps} eps={eps:.4g} owned={n_owned} "
-                        f"t={_time.time():.1f}",
-                        file=_sys.stderr,
-                    )
                 sweeps += 1
                 if n_owned >= n_workers:
                     break

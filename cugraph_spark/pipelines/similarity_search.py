@@ -37,11 +37,33 @@ def _unit(df: DataFrame, vec_col: str, out_col: str) -> DataFrame:
     scoring over unit vectors is a single dot — the inline
     dot/(norm*norm) form re-walks both arrays three times per PAIR,
     which at |Q|x|C| or VxL pair counts is ~3x the FLOPs of the whole
-    scan (measured on the 200k x 64-dim probe, scripts/bench_pipeline.py)."""
+    scan (measured on the 200k x 64-dim probe, scripts/bench_pipeline.py).
+
+    Zero-norm contract (queries, corpus rows and centroids alike): a
+    zero-norm vector normalizes to nulls instead of dividing by zero
+    (``[DIVIDE_BY_ZERO]`` under ANSI mode), so every cosine it takes part
+    in is null and ``_top_k`` never returns it."""
     return (
         df.withColumn("_nrm", _norm(F.col(vec_col)))
-        .withColumn(out_col, F.transform(F.col(vec_col), lambda x: x / F.col("_nrm")))
+        .withColumn(
+            out_col,
+            F.transform(F.col(vec_col), lambda x: F.when(F.col("_nrm") > 0, x / F.col("_nrm"))),
+        )
         .drop("_nrm")
+    )
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The k best (query_id, vec_id, cosine) rows per query, ties broken by
+    vec_id for determinism. A null cosine (a zero-norm query or corpus
+    row, see ``_unit``) ranks after every real score and is dropped after
+    ranking, so it is never a hit; the filter sits above the window,
+    where the optimizer cannot push it down to re-score every pair."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    return (
+        scored.withColumn("_rn", F.row_number().over(w))
+        .filter((F.col("_rn") <= k) & F.col("cosine").isNotNull())
+        .select("query_id", "vec_id", "cosine")
     )
 
 
@@ -78,14 +100,10 @@ def brute_force_topk(
     scored = c.crossJoin(F.broadcast(q)).select(
         "query_id",
         "vec_id",
-        (_dot(F.col("_qu"), F.col("_cv")) / _norm(F.col("_cv"))).alias("cosine"),
+        (_dot(F.col("_qu"), F.col("_cv")) / F.nullif(_norm(F.col("_cv")), F.lit(0.0)))
+        .alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", "vec_id", "cosine")
-    )
+    return _top_k(scored, k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -145,12 +163,7 @@ def lsh_topk(
         .select("query_id", "vec_id", _dot(F.col("_qu"), F.col("_cu")).alias("cosine"))
         .dropDuplicates(["query_id", "vec_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", "vec_id", "cosine")
-    )
+    return _top_k(scored, k)
 
 
 def _pair_cosine(q_col, c_col):
@@ -160,7 +173,8 @@ def _pair_cosine(q_col, c_col):
     fold per pair (measured ~7 s -> ~1 s on the 489k-pair IVF probe
     re-rank at 200k x 64-dim). Sum-order ulp drift vs the JVM fold is
     the same engine-order tolerance the cross-engine oracles already
-    absorb via rounding."""
+    absorb via rounding. A zero-norm corpus row or query (nulls after
+    ``_unit``) scores NaN, which Arrow hands to Spark as null."""
     import numpy as np
 
     @F.pandas_udf("double")
@@ -183,16 +197,11 @@ def _pair_cosine(q_col, c_col):
 def _unit_centroid_rows(cent) -> list[tuple[int, list[float]]]:
     """Collect the unit-normalized centroid table to the driver —
     n_lists x dim doubles, a few KB. Normalization happens in Spark
-    (same expression as ``_unit``), so the collected values are
-    bit-identical to the ``_cru`` column a join would see. A zero-norm
-    centroid (a list whose members average to zero) normalizes to nulls
-    instead of dividing by zero; ``_nearest_unit`` never picks it."""
-    unit = cent.withColumn("_nrm", _norm(F.col("_ctr"))).select(
-        "list_id",
-        F.transform(
-            "_ctr", lambda x: F.when(F.col("_nrm") > 0, x / F.col("_nrm"))
-        ).alias("_cru"),
-    )
+    (``_unit``), so the collected values are bit-identical to the
+    ``_cru`` column a join would see. A zero-norm centroid (a list whose
+    members average to zero) normalizes to nulls instead of dividing by
+    zero; ``_nearest_unit`` never picks it."""
+    unit = _unit(cent, "_ctr", "_cru").select("list_id", "_cru")
     return sorted(((r[0], list(r[1])) for r in unit.collect()), key=lambda t: t[0])
 
 
@@ -436,12 +445,7 @@ def ivf_topk(
         "vec_id",
         _pair_cosine(F.col("_qu"), F.col("_cv")).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", "vec_id", "cosine")
-    )
+    return _top_k(scored, k)
 
 
 def semantic_duplicates(

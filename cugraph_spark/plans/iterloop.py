@@ -279,6 +279,20 @@ class FusedSwap:
         """Nothing to release: checkpoint blocks follow driver GC."""
 
 
+def next_distance() -> Column:
+    """Aggregate giving a frontier loop's new level, ``max(distance) + 1``
+    over the frontier rows that reach a vertex. Every frontier row of a
+    level-synchronous loop carries the same distance, so this is the
+    level's number. Derived from data instead of ``F.lit(depth)``, the
+    loop body plans the same at every level: a per-round literal would
+    be inlined into the generated code and compile new classes each
+    level, while this body compiles once and is reused across levels,
+    calls and graph depths."""
+    from pyspark.sql import functions as F
+
+    return (F.max("distance") + 1).alias("distance")
+
+
 def collect_scalars(df: DataFrame, exprs: Sequence[Column]) -> tuple:
     """Run one aggregation job returning the given scalar expressions.
 

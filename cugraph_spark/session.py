@@ -13,6 +13,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Whole-stage codegen classes kept per JVM (the static
+# ``spark.sql.codegen.cache.maxEntries``; Spark's default is 100). The
+# engine's kernels are these Janino-compiled classes, and an evicted one
+# is recompiled on the driver the next time its plan shape runs (11-15 ms
+# each). One pass of the perfbench workloads needs ~180-190 distinct
+# classes (deep_frontier 179-180, rmat_power_law 191), so at 100 entries
+# the LRU cache thrashed and every warm pass recompiled all of them (~2-
+# 2.7 s of driver time a pass on a 4-core box); at 1000 the second pass on
+# compiles none. A class is ~7 KB of source and ~2.4 KB of bytecode, so a
+# full cache is tens of MB of driver heap at most. One run of the 50-query
+# contract suite (scripts/check_contract.py, sf0.01) compiles {CONTRACT}
+# distinct classes, which also fits. The conf is static: a session not
+# made here keeps Spark's default unless it sets the conf at launch.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(
     app_name: str = "cugraph_spark",
@@ -35,6 +50,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

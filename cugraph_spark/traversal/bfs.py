@@ -63,7 +63,7 @@ def bfs(
     visited = iterloop.local_table(
         spark, [(i, 0, -1) for i in ids], "vertex long, distance int, predecessor long"
     )
-    frontier = visited.select("vertex")
+    frontier = visited.select("vertex", "distance")
     depth = 0
     # Per-level checkpoint + frontier count fused into ONE job
     # (iterloop.FusedSwap): the new frontier is lazily checkpointed and
@@ -89,7 +89,7 @@ def bfs(
                     jk,
                 )
                 .groupBy(F.col(gk).alias("vertex"))
-                .agg(F.min(jk).alias("predecessor"))
+                .agg(F.min(jk).alias("predecessor"), iterloop.next_distance())
                 .join(
                     iterloop.hint_state_join(
                         visited.select("vertex"), G.number_of_vertices()
@@ -100,13 +100,12 @@ def bfs(
             )
             depth += 1
             nxt, (n_new,) = fs.swap(
-                nxt.select("vertex", F.lit(depth).cast("int").alias("distance"), "predecessor"),
-                [F.count(F.lit(1))],
+                nxt.select("vertex", "distance", "predecessor"), [F.count(F.lit(1))]
             )
             if n_new == 0:
                 break
             visited = iterloop.truncate_lineage(visited.unionByName(nxt), depth, 4)
-            frontier = nxt.select("vertex")
+            frontier = nxt.select("vertex", "distance")
 
     out = (
         G.vertices_internal.join(visited, "vertex", "left")
@@ -191,7 +190,7 @@ def multi_source_bfs(
         [(i, i, 0, -1) for i in ids],
         "source long, vertex long, distance int, predecessor long",
     )
-    frontier = visited.select("source", "vertex")
+    frontier = visited.select("source", "vertex", "distance")
     depth = 0
     fs = iterloop.FusedSwap()  # fused checkpoint+count, as in bfs()
     # same aligned-aggregation flip as bfs(): frontier joins on DST,
@@ -212,7 +211,7 @@ def multi_source_bfs(
                     jk,
                 )
                 .groupBy("source", F.col(gk).alias("vertex"))
-                .agg(F.min(jk).alias("predecessor"))
+                .agg(F.min(jk).alias("predecessor"), iterloop.next_distance())
                 .join(
                     iterloop.hint_state_join(
                         visited.select("source", "vertex"),
@@ -224,15 +223,13 @@ def multi_source_bfs(
             )
             depth += 1
             nxt, (n_new,) = fs.swap(
-                nxt.select(
-                    "source", "vertex", F.lit(depth).cast("int").alias("distance"), "predecessor"
-                ),
+                nxt.select("source", "vertex", "distance", "predecessor"),
                 [F.count(F.lit(1))],
             )
             if n_new == 0:
                 break
             visited = iterloop.truncate_lineage(visited.unionByName(nxt), depth, 4)
-            frontier = nxt.select("source", "vertex")
+            frontier = nxt.select("source", "vertex", "distance")
 
     out = visited
     out = G.unrenumber(out, "vertex")

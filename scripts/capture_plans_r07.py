@@ -138,7 +138,7 @@ def main() -> None:
     )
     state_rows = n * 8
     with iterloop.small_plan(spark, state_rows):
-        res, dmax = bcmod._forward(edges, seeds, jk, gk, state_rows)
+        res, *_, dmax = bcmod._forward(edges, seeds, jk, gk, state_rows)
         d = max(dmax, 1)
         if isinstance(res, list):
             levels = res
@@ -187,12 +187,10 @@ def main() -> None:
 
     # ---- vertex_coloring 'used' aggregation orientation ----------------------
     # The decider agg of the r7 orientation A/B: collect_set partial
-    # buffers are not V-bounded, so the dst-keyed exchange carries fat
-    # set buffers while the src-keyed form stays inside the cached
-    # partitioning. Capture honors SPARK_GRAFT_COLOR_FLIP exactly like
-    # the implementation (before = run with SPARK_GRAFT_COLOR_FLIP=0).
-    flip = os.environ.get("SPARK_GRAFT_COLOR_FLIP", "1") == "1"
-    agg_k, oth_k = (SRC, DST) if flip else (DST, SRC)
+    # buffers are not V-bounded, so a dst-keyed exchange carries fat set
+    # buffers while the src-keyed form (the implementation's only
+    # orientation since the A/B settled) stays inside the cached
+    # partitioning.
     colored = iterloop.materialize(
         g.vertices_internal.select("vertex", (F.col("vertex") % 7).cast("int").alias("color"))
     )
@@ -200,21 +198,17 @@ def main() -> None:
         used = (
             edges.join(
                 iterloop.hint_state_join(
-                    colored.select(F.col("vertex").alias(oth_k), "color"), n
+                    colored.select(F.col("vertex").alias(DST), "color"), n
                 ),
-                oth_k,
+                DST,
             )
-            .groupBy(F.col(agg_k).alias("vertex"))
+            .groupBy(F.col(SRC).alias("vertex"))
             .agg(F.sort_array(F.collect_set("color")).alias("_used"))
         )
         save(
             "vertex_coloring_used_agg",
             tag,
-            (
-                f"'used' collect_set aggregation keyed on {agg_k} "
-                f"(flip={'on' if flip else 'off'})",
-                explain_str(used),
-            ),
+            ("'used' collect_set aggregation keyed on src", explain_str(used)),
         )
 
     spark.stop()

@@ -7,6 +7,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
+from cugraph_spark.session import CODEGEN_CACHE_ENTRIES
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -18,6 +20,8 @@ def spark():
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "6g")
+        # static: the engine's codegen cache size, not Spark's 100 default
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )
     s.sparkContext.setLogLevel("ERROR")

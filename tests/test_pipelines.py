@@ -2581,3 +2581,30 @@ def test_vp8l_alpha_hint_does_not_flatten_real_alpha():
     opaque = _argb_image(w, h, seed=6)  # alpha 255 everywhere
     got = _webp_decode(_encode_vp8l(w, h, opaque, alpha_used=1))
     assert got is not None and got[3] == 4
+
+
+@pytest.mark.parametrize("search", ["brute", "lsh", "ivf"])
+def test_zero_norm_vectors_are_never_hits(spark, vectors, search):
+    """One zero-norm contract for cosine search: a zero-norm corpus row or
+    query normalizes to nulls (Spark's ANSI mode would raise
+    DIVIDE_BY_ZERO on the division), so it is never returned and a
+    zero-norm query gets no rows; the other queries' hits are unchanged."""
+    from cugraph_spark.pipelines.similarity_search import ivf_topk
+
+    run = {
+        "brute": lambda c, q: brute_force_topk(c, q, k=3),
+        "lsh": lambda c, q: lsh_topk(c, q, k=3, n_planes=6),
+        "ivf": lambda c, q: ivf_topk(c, q, k=3, n_lists=4, n_probe=2, kmeans_iters=3),
+    }[search]
+    zero = spark.createDataFrame([(999, [0.0] * 8)], vectors.schema)
+    corpus = vectors.unionByName(zero)
+    q = (
+        vectors.filter(F.col("vec_id").isin([0, 1]))
+        .unionByName(zero)
+        .select(F.col("vec_id").alias("query_id"), "embedding")
+    )
+    got = {(r["query_id"], r["vec_id"], r["cosine"]) for r in run(corpus, q).collect()}
+    assert got and all(999 not in (qid, vid) for qid, vid, _ in got)
+    if search == "brute":
+        want = {tuple(r) for r in brute_force_topk(vectors, q.filter("query_id != 999"), k=3).collect()}
+        assert got == want
