@@ -43,7 +43,7 @@ def _forward(edges, seeds_df, jk=SRC, gk=DST, state_rows=None):
     (``truncate_lineage``, as in bfs), so the anti-join plans at most 5
     leaves however deep the graph, and the backward sweep seeds its
     delta table from it. Each level's distance is
-    ``iterloop.next_distance()`` over the frontier, not a per-level
+    ``iterloop.next_distance`` over the frontier, not a per-level
     literal, so the level body compiles once.
 
     ``jk``/``gk``: join/aggregation key — callers flip them to DST/SRC on
@@ -72,7 +72,7 @@ def _forward(edges, seeds_df, jk=SRC, gk=DST, state_rows=None):
                 jk,
             )
             .groupBy("source", F.col(gk).alias("vertex"))
-            .agg(F.sum("sigma").alias("sigma"), iterloop.next_distance())
+            .agg(F.sum("sigma").alias("sigma"), iterloop.next_distance(frontier))
             .join(
                 iterloop.hint_state_join(
                     visited.select("source", "vertex"), state_rows

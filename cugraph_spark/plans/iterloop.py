@@ -279,17 +279,24 @@ class FusedSwap:
         """Nothing to release: checkpoint blocks follow driver GC."""
 
 
-def next_distance() -> Column:
+def next_distance(frontier: DataFrame) -> Column:
     """Aggregate giving a frontier loop's new level, ``max(distance) + 1``
-    over the frontier rows that reach a vertex. Every frontier row of a
-    level-synchronous loop carries the same distance, so this is the
+    over the ``frontier`` rows that reach a vertex. Every frontier row of
+    a level-synchronous loop carries the same distance, so this is the
     level's number. Derived from data instead of ``F.lit(depth)``, the
     loop body plans the same at every level: a per-round literal would
     be inlined into the generated code and compile new classes each
     level, while this body compiles once and is reused across levels,
-    calls and graph depths."""
+    calls and graph depths.
+
+    A seed frontier may leave ``distance`` out; its successors are level
+    1, a constant shared by every call. bfs does so to keep its seed
+    frontier and the seed side of its visited anti-join one Arrow
+    ``LocalRelation``, whose broadcast the two joins then share."""
     from pyspark.sql import functions as F
 
+    if "distance" not in frontier.columns:
+        return F.lit(1).alias("distance")
     return (F.max("distance") + 1).alias("distance")
 
 

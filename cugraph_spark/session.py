@@ -17,16 +17,17 @@ from pyspark.sql import SparkSession
 # ``spark.sql.codegen.cache.maxEntries``; Spark's default is 100). The
 # engine's kernels are these Janino-compiled classes, and an evicted one
 # is recompiled on the driver the next time its plan shape runs (11-15 ms
-# each). One pass of the perfbench workloads needs ~180-190 distinct
-# classes (deep_frontier 179-180, rmat_power_law 191), so at 100 entries
-# the LRU cache thrashed and every warm pass recompiled all of them (~2-
-# 2.7 s of driver time a pass on a 4-core box); at 1000 the second pass on
-# compiles none. A class is ~7 KB of source and ~2.4 KB of bytecode, so a
-# full cache is tens of MB of driver heap at most. One run of the 50-query
-# contract suite (scripts/check_contract.py, sf0.01) compiles {CONTRACT}
-# distinct classes, which also fits. The conf is static: a session not
-# made here keeps Spark's default unless it sets the conf at launch.
-CODEGEN_CACHE_ENTRIES = 1000
+# each). One pass of the perfbench workloads needs ~180-200 distinct
+# classes (deep_frontier 178-184, rmat_power_law 191-200), so at 100
+# entries the LRU cache thrashed and every warm pass recompiled all of
+# them (~2-2.7 s of driver time a pass on a 4-core box); with room for
+# them the second pass on compiles none. One run of the 50-query contract
+# suite (scripts/check_contract.py, sf0.01) compiles 2790 distinct
+# classes, so the cache holds 3000. A class is ~7 KB of source and
+# ~2.4 KB of bytecode, so a full cache is tens of MB of driver heap. The
+# conf is static: a session not made here keeps Spark's default unless it
+# sets the conf at launch.
+CODEGEN_CACHE_ENTRIES = 3000
 
 
 def get_spark(

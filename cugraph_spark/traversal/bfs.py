@@ -63,7 +63,7 @@ def bfs(
     visited = iterloop.local_table(
         spark, [(i, 0, -1) for i in ids], "vertex long, distance int, predecessor long"
     )
-    frontier = visited.select("vertex", "distance")
+    frontier = visited.select("vertex")
     depth = 0
     # Per-level checkpoint + frontier count fused into ONE job
     # (iterloop.FusedSwap): the new frontier is lazily checkpointed and
@@ -89,7 +89,7 @@ def bfs(
                     jk,
                 )
                 .groupBy(F.col(gk).alias("vertex"))
-                .agg(F.min(jk).alias("predecessor"), iterloop.next_distance())
+                .agg(F.min(jk).alias("predecessor"), iterloop.next_distance(frontier))
                 .join(
                     iterloop.hint_state_join(
                         visited.select("vertex"), G.number_of_vertices()
@@ -190,7 +190,7 @@ def multi_source_bfs(
         [(i, i, 0, -1) for i in ids],
         "source long, vertex long, distance int, predecessor long",
     )
-    frontier = visited.select("source", "vertex", "distance")
+    frontier = visited.select("source", "vertex")
     depth = 0
     fs = iterloop.FusedSwap()  # fused checkpoint+count, as in bfs()
     # same aligned-aggregation flip as bfs(): frontier joins on DST,
@@ -211,7 +211,7 @@ def multi_source_bfs(
                     jk,
                 )
                 .groupBy("source", F.col(gk).alias("vertex"))
-                .agg(F.min(jk).alias("predecessor"), iterloop.next_distance())
+                .agg(F.min(jk).alias("predecessor"), iterloop.next_distance(frontier))
                 .join(
                     iterloop.hint_state_join(
                         visited.select("source", "vertex"),
