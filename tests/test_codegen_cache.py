@@ -10,9 +10,9 @@ value is inlined into fresh generated code).
 
 The measured calls run with AQE off. Under AQE a query's codegen stage
 ids, which are part of each class's cache key, follow the order in which
-its shuffle stages finish, so a query with two independent stages (force
-atlas2's attraction and repulsion aggregates) now and then recompiles
-the same code under new ids. That is timing, not plan shape.
+its shuffle stages finish, so a query with two independent stages
+(force_atlas2's attraction and repulsion aggregates) now and then
+recompiles the same code under new ids. That is timing, not plan shape.
 """
 
 from contextlib import contextmanager
